@@ -166,6 +166,7 @@ def _ensure_loaded() -> None:
 PRIORITY: tuple[str, ...] = (
     # --- blind-spot head: ops whose behavior-relevant code changed
     # through fn or helper closure without driver re-verification ---
+    "dedup_minhash_recall_eval",  # r12 stamp; r13 exact-duplicate class collapse (fn)
     "graph_connected_components",  # r9 stamp; r13 star-contraction rewrite (helpers)
     "timeseries_resample_linear",  # r12 stamp; r13 event_id tie-break (fn)
     "lm_doc_quality_ppm",  # r6 stamp; r12 word_ngrams helper rewrite
@@ -218,14 +219,14 @@ PRIORITY: tuple[str, ...] = (
     "win_sliding_distinct_users",  # r3
     "agg_approx_distinct",  # r4
     "agg_bitmap_distinct",  # r4
-    "agg_collect_sorted",  # r4
 )
 
-# ROUND-12 rollover: EMPTY — the r12 stale list is exactly the 16-op
-# window head (the r11 list was 7 ops, all re-certified by
-# CORRECTNESS_r11), so nothing rolls to round 13.  tests/
-# test_ledger.py enforces every stale op sits in PRIORITY ∪ ROLLOVER
-# and that ROLLOVER contains only genuinely-stale ops (no padding).
+# ROUND-13 rollover: the 67 helpers-stale ops that did not fit the r13
+# window.  CORRECTNESS_r13 stamped agg_collect_sorted green, so when
+# dedup_minhash_recall_eval took the window head the displaced tail op
+# was fresh and stays out of ROLLOVER.  tests/test_ledger.py enforces
+# every stale op sits in PRIORITY ∪ ROLLOVER and that ROLLOVER
+# contains only genuinely-stale ops (no padding).
 ROLLOVER: tuple[str, ...] = (
     "agg_conditional",  # r4
     "agg_cube",  # r4
