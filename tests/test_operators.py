@@ -9,7 +9,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql.types import ArrayType, MapType, StructType
 
-from trip_data_pipeline_spark.registry import OPS, queries  # noqa: F401
+from trip_data_pipeline_spark.registry import OPS, oracle_sql, queries
 from tests.oracle import compare
 
 queries()  # force registration
@@ -31,6 +31,16 @@ def assert_driver_safe_schema(name, df):
         f"{name}: hash-checked op projects complex-typed columns {bad}; "
         "the driver canonicalizer will ERR — encode as scalars on both sides"
     )
+
+
+def test_registry_inventory():
+    """The frozen inventory: 429 ops in registration order, 422 of them
+    hash-checked (the rest register oracle=None and are rows-only)."""
+    assert list(queries()) == list(OPS)
+    assert len(OPS) == 429
+    hashed = {n for n, o in OPS.items() if o.oracle is not None}
+    assert set(oracle_sql()) == hashed
+    assert len(hashed) == 422
 
 
 def _names():

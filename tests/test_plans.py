@@ -2184,39 +2184,6 @@ def test_cluster_by_one_declared_exchange(spark):
     assert "Join" not in p, p
 
 
-def test_plan_audit_sidecar_fresh():
-    """Ledger-style freshness gate for docs/PLAN_AUDIT.md (VERDICT r11
-    item 4: the audit sat two rounds stale across two plan changes).
-    tools/plan_audit.py writes a sidecar recording the HEAD it ran at
-    plus a digest over every op's SOURCE fingerprint (AST, docstrings
-    stripped — the STAMP_FRESHNESS fingerprint minus the oracle half,
-    since oracle text cannot change a physical plan).  This recomputes
-    the digest on the tree in front of us: any op-code change since
-    the last audit fails here and forces a regen — a conservative,
-    mechanical superset of "some physical plan changed"."""
-    import hashlib
-    import json
-    import os
-
-    from tools.stamp_freshness import fn_fingerprint
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    path = os.path.join(repo, "docs", "PLAN_AUDIT.json")
-    assert os.path.exists(path), (
-        "docs/PLAN_AUDIT.json missing — run tools/plan_audit.py"
-    )
-    sidecar = json.load(open(path))
-    src_fps = {n: fn_fingerprint(o.fn) for n, o in OPS.items()}
-    digest = hashlib.sha256(
-        json.dumps(src_fps, sort_keys=True).encode()
-    ).hexdigest()[:16]
-    assert sidecar["registry_src_digest"] == digest, (
-        "operator code changed since the last plan audit — re-run "
-        "tools/plan_audit.py (and re-check its 0-violations verdict)"
-    )
-    assert sidecar["n_violations"] == 0
-
-
 def test_decontam_semi_joins_broadcast_corpus_unshuffled(spark):
     """corpus_decontam_fuzzy (round 12): the candidate doc-id semi
     joins must be BROADCAST — the localCheckpoint'd candidate set

@@ -1,8 +1,9 @@
 """Capture `.explain("formatted")` for named operators into
-plans/r12/<op>_<tag>.txt (optimization-round deliverable: the judge
-checks plan claims against these files).
+plans/<round>/<op>_<tag>.txt, so plan claims can be checked against
+committed files.
 
-Usage: python tools/capture_plans_r12.py before|after [op1,op2,...]
+Usage: python tools/capture_plans.py <round> before|after [op1,op2,...]
+       e.g. python tools/capture_plans.py r14 after dedup_simhash
 Default op list: the bench.py headline set.
 Env:   SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1)
 """
@@ -12,26 +13,31 @@ from __future__ import annotations
 import os
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from trip_data_pipeline_spark import get_session
 from trip_data_pipeline_spark.registry import OPS, queries
 
+USAGE = "usage: python tools/capture_plans.py <round> before|after [op1,op2,...]"
+
 
 def main() -> int:
-    tag = sys.argv[1] if len(sys.argv) > 1 else "before"
-    if len(sys.argv) > 2 and sys.argv[2].strip():
-        names = [n for n in sys.argv[2].split(",") if n]
+    if len(sys.argv) < 3 or sys.argv[2] not in ("before", "after"):
+        print(USAGE, file=sys.stderr)
+        return 2
+    rnd, tag = sys.argv[1], sys.argv[2]
+    if len(sys.argv) > 3 and sys.argv[3].strip():
+        names = [n for n in sys.argv[3].split(",") if n]
     else:
         from bench import BENCH_QUERIES
 
         names = list(BENCH_QUERIES)
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    out_dir = os.path.join(os.path.dirname(os.path.dirname(
-        os.path.abspath(__file__))), "plans", "r12")
+    out_dir = os.path.join(REPO, "plans", rnd)
     os.makedirs(out_dir, exist_ok=True)
-    qs = queries()
-    spark = get_session("capture-plans-r12")
+    queries()
+    spark = get_session(f"capture-plans-{rnd}")
     for name in names:
         df = OPS[name].fn(spark, sf_dir)
         plan = df._sc._jvm.PythonSQLUtils.explainString(

@@ -1,4 +1,4 @@
-"""Whole-registry physical-plan audit -> docs/PLAN_AUDIT.md.
+"""Whole-registry physical-plan audit, printed as a markdown report.
 
 Builds every registered operator's DataFrame at sf0.01 and scans the
 formatted physical plan for the scale anti-patterns the project bans
@@ -14,12 +14,11 @@ formatted physical plan for the scale anti-patterns the project bans
   PYTHON_OK list shared with tests/test_plans.py).
 
 It also records per-op Exchange counts and whether parquet scans carry
-pushed filters, and prints summary histograms.  The generated report
-is judge-facing evidence; the enforcing gates are the parametrized
-sweeps in tests/test_plans.py (this tool and those tests share their
-allowlists, so the report and the gate cannot drift apart).
+pushed filters, and prints summary histograms.  The enforcing gate
+is the parametrized ``test_plan_shape_sweep`` in tests/test_plans.py,
+which checks the same ops against the same allowlists on every run.
 
-Usage: python tools/plan_audit.py   (writes docs/PLAN_AUDIT.md)
+Usage: python tools/plan_audit.py   (prints the report; exit 1 on any violation)
 """
 
 from __future__ import annotations
@@ -35,14 +34,6 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF = "/root/testdata/sf0.01"
 
-PY_NODES = (
-    "BatchEvalPython",
-    "ArrowEvalPython",
-    "FlatMapGroupsInPandas",
-    "MapInPandas",
-    "PythonMapInArrow",
-)
-
 def main() -> int:
     from pyspark.sql import SparkSession  # noqa: F401
 
@@ -50,6 +41,7 @@ def main() -> int:
     # and this report use the SAME sets, so they cannot drift apart.
     from tests.test_plans import (
         CARTESIAN_OK,
+        PY_PLAN_NODES,
         PYTHON_OK,
         SINGLE_PARTITION_OK,
         SKIP_PLAN_SWEEP,
@@ -74,7 +66,7 @@ def main() -> int:
         p = buf.getvalue()
         exchanges = len(re.findall(r"\bExchange\b", p))
         cart = ("CartesianProduct" in p) or ("BroadcastNestedLoopJoin" in p)
-        py = sorted({n for n in PY_NODES if n in p})
+        py = sorted({n for n in PY_PLAN_NODES if n in p})
         pushed = len(re.findall(r"PushedFilters: \[(?!\])", p))
         flags = []
         if cart:
@@ -105,7 +97,7 @@ def main() -> int:
     n_py = sum(1 for r in audited if r[3] != "-")
     n_cart = sum(1 for r in audited if "cartesian" in r[4].lower())
 
-    out = ["# Physical-plan audit (generated — `python tools/plan_audit.py`)", ""]
+    out = ["# Physical-plan audit (`python tools/plan_audit.py`)", ""]
     out.append(
         f"**{len(audited)} operators audited** ({len(rows) - len(audited)} "
         "excluded: streaming/sink/side-effecting ops that execute at "
@@ -154,46 +146,7 @@ def main() -> int:
     out.append("| op | exchanges | pushed-filter scans | python nodes | flags |")
     out.append("| --- | --- | --- | --- | --- |")
     out += [f"| `{n}` | {e} | {pf} | {py} | {fl} |" for n, e, pf, py, fl in rows]
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    path = os.path.join(repo, "docs", "PLAN_AUDIT.md")
-    with open(path, "w") as f:
-        f.write("\n".join(out) + "\n")
-    # Ledger-style freshness sidecar (VERDICT r11 item 4: the audit
-    # went two rounds stale across two plan changes with nothing to
-    # notice).  The sidecar records the HEAD the audit was generated
-    # at (provenance) plus a digest over every op's SOURCE fingerprint
-    # — the same AST fingerprint STAMP_FRESHNESS uses, minus the
-    # oracle half (oracle text cannot change a physical plan).
-    # tests/test_plans.py recomputes the digest on the current tree
-    # and fails if it drifted: any op-code change forces a regen, a
-    # conservative superset of "any plan changed" that is mechanical
-    # and cheap to check.
-    import hashlib
-    import json
-    import subprocess
-
-    from tools.stamp_freshness import fn_fingerprint
-
-    src_fps = {n: fn_fingerprint(o.fn) for n, o in OPS.items()}
-    digest = hashlib.sha256(
-        json.dumps(src_fps, sort_keys=True).encode()
-    ).hexdigest()[:16]
-    head = subprocess.run(
-        ["git", "rev-parse", "HEAD"], cwd=repo,
-        capture_output=True, text=True, check=True,
-    ).stdout.strip()
-    sidecar = {
-        "head": head,
-        "registry_src_digest": digest,
-        "n_audited": len(audited),
-        "n_violations": len(violations),
-    }
-    jpath = os.path.join(repo, "docs", "PLAN_AUDIT.json")
-    with open(jpath, "w") as f:
-        json.dump(sidecar, f, indent=1)
-        f.write("\n")
-    print(f"wrote {path}: {len(audited)} audited, {len(violations)} violations")
-    print(f"wrote {jpath}: digest {digest} at {head[:10]}")
+    print("\n".join(out))
     return 1 if violations else 0
 
 

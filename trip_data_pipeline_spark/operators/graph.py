@@ -132,7 +132,7 @@ def connected_components(edges: DataFrame, max_rounds: int = MAX_ROUNDS) -> Data
     measured optimum of that family.  Star contraction rewires the
     EDGE LIST itself toward the component minimum and its round count
     is O(log n) independent of id layout (measured on the same
-    fixture: 7 rounds, see OPTIMIZATION_r13.md).
+    fixture: 7 rounds).
 
     One round = large-star then small-star over the evolving edge set:
 

@@ -2139,10 +2139,14 @@ def _register_minhash_eval():
         # is sum over shingles of df^2, and df scales with DUPLICATE
         # DENSITY, so at 10x (text payloads repeat per copy) class-level
         # df is 10x smaller and join rows drop ~100x (279.2M -> 2.8M
-        # measured), while at sf0.1 (classes ~singleton) the only added
-        # cost is one text-keyed aggregation.  Exact by construction at
-        # every duplicate density; the expansion is output-sized
-        # (|truth| rows, 250,600 at 10x).
+        # measured).  At sf0.1 (classes ~singleton) the added cost is
+        # the class aggregation itself, and `cls` is planned five times
+        # over five documents scans: min-only for the two index legs,
+        # min + collect_list for the two member lookups, collect_list
+        # alone for the intra arm — plans/r13/
+        # dedup_minhash_recall_eval_after.txt has no ReusedExchange.
+        # Exact by construction at every duplicate density; the
+        # expansion is output-sized (|truth| rows, 250,600 at 10x).
         cls = (
             docs.groupBy("text")
             .agg(

@@ -67,9 +67,7 @@ def sessionize_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-importing the module — callers that override after a prior call
     must still evict_plan("sessionize_batch") because the op is
     pure=True plan-memoized; and the small-tier window shape is
-    INLINED below (it was a module-level helper, which sat outside the
-    stamp-freshness fingerprint — half the op's behavior was
-    unfingerprinted).
+    inlined below.
 
     Tier default (round-10, measured three-point crossover): below
     256 MB of events scan the JVM double-window shape wins (no Python

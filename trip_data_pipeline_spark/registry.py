@@ -103,214 +103,11 @@ def _ensure_loaded() -> None:
     from trip_data_pipeline_spark import operators  # noqa: F401
 
 
-# Verification priority: the driver checks queries() keys in order with
-# a bounded window (50 per round), so the window ROTATES each round to
-# ops without a driver-stamped green row.  Ledger after round 7
-# (CORRECTNESS_r01-r07, judge-confirmed in VERDICT r7): 335/429 ops
-# cumulative driver-green (327 hash-PASS + 8 rows-only-ran), 94 never
-# yet in a window.  The ROUND-7 window landed exactly as staged:
-# CORRECTNESS_r07 stamped all 50 names green — 48 hash-PASS plus the
-# 2 declared rows-only ops (agg_hll_sketch / agg_percentile_approx,
-# approx sketches per SURVEY §5.3; the driver records "no_oracle" +
-# rows-ran for those by contract).
-#
-# ROTATION PLAN (unchanged since r6; ledger figures re-checked against
-# CORRECTNESS_r01-r07 at round-8 open): r7 took its 50 (94 remain),
-# r8 takes the first 50 of the ROUNDS 8-9 list (the tuple below IS
-# that list, unchanged names in unchanged order), r9 the remaining 44
-# — 50 + 44 = 94 closes the ledger, with r9's 6 spare slots (50-44)
-# absorbing any stragglers.  Both windows were pre-verified 50/50 and
-# 44/44 HASH-OK at round-6 close, re-verified at round-7 open, covered
-# by the round-7-close full-registry sim (429/429 at sf0.01 on the
-# shipping engine), and confirmed by the round-7 judge's own 429/429
-# sweep (VERDICT r7).  Rotation invariants are machine-enforced by
-# tests/test_ledger.py: exactly 50 unique registered names, zero
-# overlap with any prior driver stamp at round open.
-# ROUND 8 (50) — DONE: CORRECTNESS_r08 stamped all 50 green (zero err),
-#   cumulative ledger 385/429 after eight windows.
-# ROUND 9 (44 + 6 spare) — DONE: CORRECTNESS_r09 stamped all 50 green
-#   (zero err); the cumulative driver ledger CLOSED at 429/429.
-# ROUND 10 (50) — DONE: CORRECTNESS_r10 stamped all 50 green (zero
-#   err) — every behavioral fix of rounds 8-9 is driver-stamped on its
-#   current semantics; the 5-op r7 tail rolled over as staged.
-# ROUND 11 (50) — DONE: CORRECTNESS_r11 stamped all 50 green (zero
-#   err) — the 7-op stale head (the 5-op r7 ROLLOVER tail,
-#   sessionize_batch's r11 inline, corpus_decontam_fuzzy's r11
-#   semi-join pruning) re-certified, plus 43 oldest-stamp re-certs;
-#   ROLLOVER emptied and the oldest stamp in the ledger moved to r2.
-# ROUND 12 (50) — ACTIVE: the window heads with the ops the
-#   OPTIMIZATION round re-fingerprints: the build-phase
-#   tail (corpus_decontam_fuzzy's cand checkpoint) plus the r12
-#   optimization rewrites — resample/theil-sen/minhash-eval/gap-cap/
-#   cusum (mid-round commits) and the streaming no-data-batch skips +
-#   the decontam candidate-bounded verification (this session).  Every
-#   one re-verified HASH-OK (or rows-ran) at sf0.01 under the
-#   vanilla-session sim before staging; all 16 head the window,
-#   oldest stamp first.  The remaining 34 slots are oldest-stamp-first
-#   re-certification per VERDICT r11 item 5: all 27 remaining r2-stamp
-#   ops plus the first 7 r3-stamp ops in name order.  Re-stamping
-#   greens is exactly what a re-certification window is for;
-#   test_ledger's never-waste-a-slot rule is satisfied because zero
-#   never-stamped ops exist.
-# ROUND 12 (50) — DONE: CORRECTNESS_r12 stamped 49 hash-OK + the
-#   declared rows-only stream_transform_with_state (its contract).
-# ROUND 13 (50) — ACTIVE: the fingerprint gained a third component
-#   (VERDICT r12 item 1) hashing each op's TRANSITIVE helper closure,
-#   which retroactively flags 117 ops whose shared helpers changed
-#   after their newest stamp.  The window heads with the ops VERDICT
-#   r12 named as the round-12 blind spot — graph_connected_components
-#   (plus its r13 star-contraction rewrite), the 6 word_ngrams
-#   consumers, resample's r13 tie-break — then the helpers-stale
-#   fill oldest-stamp-first.  The 67 that do not fit sit in ROLLOVER
-#   for round 14.
-PRIORITY: tuple[str, ...] = (
-    # --- blind-spot head: ops whose behavior-relevant code changed
-    # through fn or helper closure without driver re-verification ---
-    "dedup_minhash_recall_eval",  # r12 stamp; r13 exact-duplicate class collapse (fn)
-    "graph_connected_components",  # r9 stamp; r13 star-contraction rewrite (helpers)
-    "timeseries_resample_linear",  # r12 stamp; r13 event_id tie-break (fn)
-    "lm_doc_quality_ppm",  # r6 stamp; r12 word_ngrams helper rewrite
-    "corpus_boilerplate_ngram_prune",  # r10 stamp; r12 word_ngrams helper rewrite
-    "corpus_ngram_novelty",  # r6 stamp; r12 word_ngrams helper rewrite
-    "eval_contamination_ngram",  # r10 stamp; r12 word_ngrams helper rewrite
-    "text_repetition_metrics",  # r10 stamp; r12 word_ngrams helper rewrite (unmeasured consumer)
-    "corpus_bitext_candidates",  # r6 stamp; r12 word_ngrams helper rewrite (unmeasured consumer)
-    "dedup_shingle_containment",  # r7 stamp; shingle/text helper closure drift since r7
-    "dedup_cluster_canonical",  # r10 stamp; dedup helper closure drift since r10
-    "stream_checkpoint_resume",  # r5 stamp; streaming-harness helper closure drift since r5
-    "stream_two_level_window",  # r5 stamp; streaming-harness helper closure drift since r5
-    "stream_foreachbatch_sink",  # r10 stamp; streaming-harness helper closure drift since r10
-    "stream_outer_join_watermark",  # r10 stamp; streaming-harness helper closure drift since r10
-    "stream_static_join",  # r10 stamp; streaming-harness helper closure drift since r10
-    "geo_grid_density_cluster",  # r6 stamp; helper closure drift since r6
-    # --- helpers-stale fill, oldest stamp first (the retroactive
-    # helper-closure fingerprint flags these: shared helpers in io/
-    # common/text_ops changed after their newest driver stamp) ---
-    "drop_duplicates_subset",  # r3
-    "filter_like",  # r3
-    "filter_null_semantics",  # r3
-    "hash_id_stable",  # r3
-    "join_anti",  # r3
-    "join_full_outer",  # r3
-    "join_left_outer",  # r3
-    "join_range_bucketed",  # r3
-    "join_semi",  # r3
-    "kmeans_lloyd_int",  # r3
-    "lateral_correlated_topk",  # r3
-    "multimodal_decode_ppm",  # r3
-    "pack_sequences_greedy",  # r3
-    "pivot_wide",  # r3
-    "project_rename_cast",  # r3
-    "scd2_merge_emulation",  # r3
-    "set_except",  # r3
-    "set_union_distinct",  # r3
-    "str_regexp",  # r3
-    "streak_longest_daily",  # r3
-    "struct_nested",  # r3
-    "text_chunk_sliding",  # r3
-    "text_fingerprint_rolling",  # r3
-    "text_token_count_bpe",  # r3
-    "udf_arrow_batch",  # r3
-    "udf_python_scalar",  # r3
-    "vocab_topk_coverage",  # r3
-    "win_moving_avg",  # r3
-    "win_ntile_pctrank",  # r3
-    "win_running_sum",  # r3
-    "win_sliding_distinct_users",  # r3
-    "agg_approx_distinct",  # r4
-    "agg_bitmap_distinct",  # r4
-)
-
-# ROUND-13 rollover: the 67 helpers-stale ops that did not fit the r13
-# window.  CORRECTNESS_r13 stamped agg_collect_sorted green, so when
-# dedup_minhash_recall_eval took the window head the displaced tail op
-# was fresh and stays out of ROLLOVER.  tests/test_ledger.py enforces
-# every stale op sits in PRIORITY ∪ ROLLOVER and that ROLLOVER
-# contains only genuinely-stale ops (no padding).
-ROLLOVER: tuple[str, ...] = (
-    "agg_conditional",  # r4
-    "agg_cube",  # r4
-    "agg_filter_clause",  # r4
-    "agg_having",  # r4
-    "agg_max_by_min_by",  # r4
-    "agg_multi_distinct",  # r4
-    "agg_percentile_exact",  # r4
-    "array_higher_order",  # r4
-    "array_ops",  # r4
-    "attribution_first_touch",  # r4
-    "bpe_pair_counts",  # r4
-    "cdc_apply_changelog",  # r4
-    "conditional_funcs",  # r4
-    "conversion_time_bounded",  # r4
-    "dedup_simhash",  # r4
-    "dq_anomaly_mad",  # r4
-    "dq_expectations_report",  # r4
-    "embed_quantize_int8",  # r4
-    "events_markov_transition",  # r4
-    "funnel_conversion",  # r4
-    "geo_trip_od_matrix",  # r4
-    "graph_pagerank_int",  # r4
-    "join_asof_nearest",  # r4
-    "join_right_outer",  # r4
-    "join_skew_salted",  # r4
-    "limit_topk_with_ties",  # r4
-    "multimodal_decode_wav",  # r4
-    "retention_cohort",  # r4
-    "scan_multi_sf_union",  # r4
-    "scan_partitioned_dpp",  # r4
-    "set_intersect_all",  # r4
-    "sink_parquet_partitioned",  # r4
-    "split_train_holdout",  # r4
-    "text_stats_by_lang",  # r4
-    "udf_map_in_arrow",  # r4
-    "unpivot_stack",  # r4
-    "win_first_last",  # r4
-    "win_range_frame",  # r4
-    "array_explode",  # r5
-    "array_posexplode",  # r5
-    "error_safe_funcs",  # r5
-    "json_variant_ops",  # r5
-    "layout_compact_small_files",  # r5
-    "layout_zorder_cluster",  # r5
-    "precision_reduce_round",  # r5
-    "scalar_from_csv_json",  # r5
-    "scalar_url_parse",  # r5
-    "scan_csv_malformed_permissive",  # r5
-    "scan_csv_multiline_quotes",  # r5
-    "scan_xml_roundtrip",  # r5
-    "sink_compressed_roundtrip",  # r5
-    "sink_csv_roundtrip",  # r5
-    "sink_dynamic_partition_overwrite",  # r5
-    "sink_json_roundtrip",  # r5
-    "sink_orc_roundtrip",  # r5
-    "sql_api_query",  # r5
-    "sql_execute_immediate",  # r5
-    "sql_identifier_clause",  # r5
-    "sql_parameterized_query",  # r5
-    "sql_pipe_syntax_query",  # r5
-    "sql_session_variables",  # r5
-    "str_collation_lcase",  # r5
-    "str_encode_hex_base64",  # r5
-    "str_format_printf",  # r5
-    "str_luhn_check",  # r5
-    "str_regexp_count_instr",  # r5
-    "udtf_python",  # r5
-)
-
-
-def _ordered() -> dict[str, Op]:
-    _ensure_loaded()
-    missing = [n for n in PRIORITY if n not in OPS]
-    if missing:  # fail loudly — a typo here would silently skew checks
-        raise KeyError(f"PRIORITY names not registered: {missing}")
-    out: dict[str, Op] = {n: OPS[n] for n in PRIORITY}
-    out.update((n, o) for n, o in OPS.items() if n not in out)
-    return out
-
-
 def queries() -> dict[str, QueryFn]:
-    return {name: o.fn for name, o in _ordered().items()}
+    _ensure_loaded()
+    return {name: o.fn for name, o in OPS.items()}
 
 
 def oracle_sql() -> dict[str, str]:
-    return {name: o.oracle for name, o in _ordered().items() if o.oracle is not None}
+    _ensure_loaded()
+    return {name: o.oracle for name, o in OPS.items() if o.oracle is not None}
